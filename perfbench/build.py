@@ -5,8 +5,10 @@ Spark distribution's jar directory, packs them into one jar, and dumps a
 class-data-sharing archive of a started Spark session so that each run's
 JVM start loads Spark's classes from the archive.
 
-Everything lands in `<build dir>/perfbench/` and is rebuilt only when a
-source file or the Spark jar set changes (content stamp).
+Everything lands in `<build dir>/perfbench/<stamp>/`, where the stamp
+hashes the graft sources, the benchmark's own files and the Spark jar
+set: a build is made once per stamp, and builds of different sources
+(say a change and its parent) sit side by side.
 
 Usage: python3 perfbench/build.py     (from the repository root)
 """
@@ -15,6 +17,7 @@ import os
 import shutil
 import subprocess
 import sys
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -62,10 +65,10 @@ JDK_OPENS = ("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
              "sun.security.action", "sun.util.calendar")
 
 
-def java_cmd(tmp_dir, archive_flag):
-    """The benchmark JVM's command prefix (up to the main class). The
-    module opens are the ones spark-submit adds on JDK 17."""
-    out = os.path.join(build_dir(), "perfbench")
+def java_cmd(out, tmp_dir, archive_flag):
+    """The benchmark JVM's command prefix (up to the main class) for the
+    build in `out`. The module opens are the ones spark-submit adds on
+    JDK 17."""
     cmd = ["java", "-Xmx3g",
            f"-Djava.io.tmpdir={tmp_dir}", "-Dspark.ui.enabled=false",
            "-Dspark.sql.session.timeZone=UTC", archive_flag]
@@ -76,8 +79,8 @@ def java_cmd(tmp_dir, archive_flag):
     return cmd
 
 
-def archive_flag():
-    a = os.path.join(build_dir(), "perfbench", "session.jsa")
+def archive_flag(out):
+    a = os.path.join(out, "session.jsa")
     return f"-XX:SharedArchiveFile={a}" if os.path.exists(a) else "-Xshare:auto"
 
 
@@ -101,7 +104,7 @@ def _archive(out):
     tmp = os.path.join(out, "tmp")
     os.makedirs(tmp, exist_ok=True)
     jsa = os.path.join(out, "session.jsa")
-    cmd = java_cmd(tmp, f"-XX:ArchiveClassesAtExit={jsa}") + ["--session"]
+    cmd = java_cmd(out, tmp, f"-XX:ArchiveClassesAtExit={jsa}") + ["--session"]
     env = dict(os.environ)
     env.pop("SPARK_LOCAL_DIRS", None)
     r = subprocess.run(cmd, cwd=tmp, stdout=subprocess.PIPE,
@@ -111,26 +114,32 @@ def _archive(out):
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def build():
-    """Compile, pack and archive if stale; return the build directory."""
-    jars = spark_jars()
-    srcs = sources()
+def stamp(jars, srcs):
+    """Content hash of everything a run depends on: the sources compiled,
+    the benchmark's Python files and the Spark jar names."""
     h = hashlib.sha256()
-    for f in srcs:
-        h.update(f.encode())
+    py = sorted(os.path.join(HERE, f) for f in os.listdir(HERE)
+                if f.endswith(".py"))
+    for f in srcs + py:
+        h.update(os.path.relpath(f, ROOT).encode())
         with open(f, "rb") as fh:
             h.update(fh.read())
     h.update("\n".join(sorted(os.listdir(jars))).encode())
-    stamp = h.hexdigest()
-    out = os.path.join(build_dir(), "perfbench")
+    return h.hexdigest()[:16]
+
+
+def build():
+    """Compile, pack and archive unless this stamp's build exists; return
+    (build directory, seconds spent building)."""
+    jars = spark_jars()
+    srcs = sources()
+    out = os.path.join(build_dir(), "perfbench", stamp(jars, srcs))
+    done = os.path.join(out, "build_s")
+    if os.path.exists(done):
+        return out, 0.0
+    t0 = time.time()
+    shutil.rmtree(out, ignore_errors=True)
     classes = os.path.join(out, "classes")
-    stamp_file = os.path.join(out, "stamp")
-    if os.path.exists(stamp_file) and open(stamp_file).read() == stamp:
-        return out
-    for f in ("stamp", "perfbench.jar", "session.jsa"):
-        if os.path.exists(os.path.join(out, f)):
-            os.remove(os.path.join(out, f))
-    shutil.rmtree(classes, ignore_errors=True)
     os.makedirs(classes)
     args_file = os.path.join(out, "sources.txt")
     with open(args_file, "w") as f:
@@ -144,11 +153,14 @@ def build():
         sys.stderr.write(r.stdout[-4000:])
         raise SystemExit(f"perfbench: compile failed ({r.returncode})")
     _jar(classes, os.path.join(out, "perfbench.jar"))
+    shutil.rmtree(classes)
     _archive(out)
-    with open(stamp_file, "w") as f:
-        f.write(stamp)
-    return out
+    secs = time.time() - t0
+    with open(done, "w") as f:
+        f.write(f"{secs:.1f}\n")
+    return out, secs
 
 
 if __name__ == "__main__":
-    print(build())
+    d, secs = build()
+    print(f"{d} (built in {secs:.1f} s)" if secs else d)

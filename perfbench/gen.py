@@ -5,41 +5,43 @@ seed writes byte-identical parquet files. All inputs are written before
 any timing starts; the program under test only ever sees these files.
 
   * ODS backlog: page-log lines and CDC envelopes on ONE event-time
-    timeline, cut into time-ordered slices (one log file and one CDC file
-    per slice), plus a province-dimension file written first.
-  * DWS history: multi-day window rows for visitor / province / keyword /
-    product in the sinks' `_ver` layout, with replayed duplicates and
-    superseded versions, plus the expected ADS answer for every
-    (endpoint, day) after dedup to the latest `_ver`.
-  * Open-vocabulary documents: a Zipf corpus with a language mix and
-    exact- and near-duplicate injection.
+    timeline (one log file and one CDC file), plus a province-dimension
+    file written first.
+  * DWS history: the same ODS process at the events fixture's daily rate,
+    aggregated into the sinks' 10 s windows for visitor / province /
+    keyword / product, written in the sinks' `_ver` layout with replayed
+    duplicates and superseded versions, plus the expected ADS answer for
+    every (endpoint, day) after dedup to the latest `_ver`.
+  * Open-vocabulary documents: the Zipf corpus process of
+    tools/gen_scale_rehearsal.py (imported: its Zipf sampler, its corpus
+    process and the duplicate rates it measured) over the documents
+    fixture's length and language mix, with a closed core vocabulary
+    mixed in.
+
+Defaults come from the repository's own inputs: the sf0.1 test
+fixtures (events, orders, customer, documents) and the fixture-to-wire
+generators Warehouse.genBaseLog / genBaseDb. Each default names its
+source; the ones marked "unverified" have none.
 """
-import bisect
 import datetime
 import json
 import os
 import random
+import sys
 from decimal import Decimal
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+import gen_scale_rehearsal as rehearsal  # noqa: E402
+
+# genBaseDb: base_province dims from the 25 nation rows
 N_PROVINCES = 25
 PROVINCES = [f"PROVINCE_{i:02d}" for i in range(N_PROVINCES)]
-
-
-def zipf_cdf(n, s):
-    """Cumulative weights over ranks 1..n with P(r) ~ 1/r^s."""
-    cdf, acc = [], 0.0
-    for r in range(1, n + 1):
-        acc += 1.0 / r ** s
-        cdf.append(acc)
-    return cdf
-
-
-def zipf_draw(rng, cdf):
-    """0-based rank drawn from a zipf_cdf table."""
-    return bisect.bisect_left(cdf, rng.random() * cdf[-1])
+# genBaseLog: `ch` is events.event_type, five types in equal shares
+CHANNELS = ("signup", "error", "click", "view", "purchase")
 
 
 def write_values(path, values):
@@ -56,42 +58,112 @@ def fmt_ts(ms):
 
 
 # ----------------------------------------------------------------------
-# ODS: page log + CDC on one timeline
+# the ODS process: page events and orders
 # ----------------------------------------------------------------------
 
 ODS_DEFAULTS = dict(
-    users=2000,            # returning visitor population
-    user_zipf=1.1,         # skew of visits over returning users
-    new_user_share=0.12,   # share of events from first-time visitors
-    skus=400,
-    sku_zipf=1.2,          # skew of clicks/orders over skus
-    keywords=60,
-    # page-type mix: entry (home, no last page), search result list,
-    # sku detail, start-up line
-    page_mix=(("home", 0.30), ("search", 0.20), ("detail", 0.45),
-              ("start", 0.05)),
-    display_share=0.5,     # share of home/detail pages carrying displays
-    events_per_slice=5000,  # page-log lines per slice
-    orders_per_slice=200,   # orders per slice (each: info, detail, payment)
-    facts_per_slice=50,     # favor / cart / comment / refund rows, each
-    slice_ms=180_000,       # event-time span of one slice
+    # sf0.1 events: 1500 users with 45-100 events each, a binomial spread,
+    # so users are drawn uniformly (Zipf exponent 0)
+    users=1500, user_zipf=0.0,
+    # genBaseLog: page type by event_id % 3 (entry / search list / sku
+    # detail), keyword kw(event_id % 7), sku (event_id % 20) + 1
+    page_mix=(("home", 1), ("search", 1), ("detail", 1)),
+    keywords=7, skus=20, sku_zipf=0.0,
+    # genBaseLog: during_time = events.value * 100; value is exponential
+    # with mean 49.87 at sf0.1 (p10 / p50 / p90 = 5.4 / 34.8 / 114)
+    during_mean=4987,
+    # genBaseDb: every 10th order (15 000 at sf0.1 beside 100 000 events),
+    # each with info, detail, a payment 60 s later and one favor / cart /
+    # comment / refund row; o_totalprice spans 1 000-500 000 with uniform
+    # quantiles
+    orders_per_event=0.15, payment_delay_ms=60_000,
+    amount_cents=(100_000, 50_000_000),
+    # unverified: the fixture has no start lines and no displays; small
+    # shares keep BaseLog's start and display branches fed
+    start_share=0.05, display_share=0.2,
+    # unverified: the backlog's size and event-time span (one slice)
+    events_per_slice=5000, slice_ms=180_000,
 )
 
 
-def _log_line(mid, uid, ts, page=None, displays=None, start=False):
-    common = {"ar": str(1 + uid % 30), "ba": "b", "ch": ("web", "app",
-              "mini")[uid % 3], "is_new": "0", "md": "md", "mid": mid,
-              "os": "os", "uid": str(uid), "vc": ("v1", "v2")[uid % 2]}
-    rec = {"common": common}
-    if start:
+def _draws(rng, p):
+    return (rehearsal.zipf_sampler(rng, p["users"], p["user_zipf"]),
+            rehearsal.zipf_sampler(rng, p["skus"], p["sku_zipf"]),
+            rehearsal.zipf_sampler(rng, p["keywords"], 0.0))
+
+
+def page_events(rng, n, lo, span, p):
+    """n log events in time order, each at its own millisecond of
+    [lo, lo + span), so (mid, ts) is unique (the Bounce contract)."""
+    user, sku, kw = _draws(rng, p)
+    kinds = [k for k, _ in p["page_mix"]]
+    weights = [w for _, w in p["page_mix"]]
+    step = span // n
+    assert step >= 2, "span too short for unique per-event times"
+    out = []
+    for i in range(n):
+        e = {"ts": lo + i * step + rng.randrange(step), "uid": user(),
+             "ch": CHANNELS[rng.randrange(len(CHANNELS))]}
+        if rng.random() < p["start_share"]:
+            e["kind"] = "start"
+        else:
+            kind = rng.choices(kinds, weights)[0]
+            e["kind"] = kind
+            e["dur"] = round(rng.expovariate(1 / p["during_mean"]))
+            if kind == "search":
+                e["item"] = f"kw{kw()}"
+            elif kind == "detail":
+                e["item"] = str(1 + sku())
+            if kind != "search" and rng.random() < p["display_share"]:
+                e["displays"] = [str(1 + sku())
+                                 for _ in range(1 + rng.randrange(3))]
+        out.append(e)
+    return out
+
+
+def orders(rng, n, lo, span, p, oid0):
+    """n orders in time order whose payments fall inside [lo, lo + span)."""
+    user, sku, _ = _draws(rng, p)
+    step = max((span - p["payment_delay_ms"] - 5_000) // max(n, 1), 1)
+    out = []
+    for j in range(n):
+        c_ms = lo + j * step + rng.randrange(step)
+        out.append({"oid": oid0 + j, "uid": user(),
+                    "prov": rng.randrange(N_PROVINCES), "sku": 1 + sku(),
+                    "amt": rng.randrange(*p["amount_cents"]), "c_ms": c_ms,
+                    "p_ms": c_ms + p["payment_delay_ms"]})
+    return out
+
+
+def _cents(c):
+    return f"{c // 100}.{c % 100:02d}"
+
+
+def log_line(e):
+    """The page-log wire line of one event (genBaseLog's shape)."""
+    uid = e["uid"]
+    rec = {"common": {"ar": "1", "ba": "b", "ch": e["ch"], "is_new": "0",
+                      "md": "md", "mid": f"u{uid}", "os": "os",
+                      "uid": str(uid), "vc": "v1"}}
+    if e["kind"] == "start":
         rec["start"] = {"entry": "icon", "open_ad_skip_ms": 0,
                         "open_ad_ms": 1000, "loading_time": 800,
                         "open_ad_id": 7}
     else:
+        page = {"page_id": {"home": "home", "search": "good_list",
+                            "detail": "good_detail"}[e["kind"]]}
+        if e["kind"] == "search":
+            page.update(last_page_id="search", item=e["item"])
+        elif e["kind"] == "detail":
+            page.update(item=e["item"], item_type="sku_id")
+        page["during_time"] = e["dur"]
         rec["page"] = page
-        if displays:
-            rec["displays"] = displays
-    rec["ts"] = ts
+        if "displays" in e:
+            rec["displays"] = [{"display_type": "query", "item": s,
+                                "item_type": "sku_id", "pos_id": j,
+                                "order": j + 1}
+                               for j, s in enumerate(e["displays"])]
+    rec["ts"] = e["ts"]
     return json.dumps(rec, separators=(",", ":"))
 
 
@@ -101,6 +173,32 @@ def _cdc(table, after):
                       separators=(",", ":"))
 
 
+def cdc_lines(o):
+    """The seven CDC envelopes of one order (genBaseDb's shape)."""
+    oid, sku, amt = str(o["oid"]), str(o["sku"]), _cents(o["amt"])
+    ct, ts = fmt_ts(o["c_ms"]), str(o["c_ms"])
+    return [
+        _cdc("order_info", {"id": oid, "province_id": str(o["prov"]),
+                            "user_id": str(o["uid"]), "order_status": "1001",
+                            "total_amount": amt, "create_time": ct}),
+        _cdc("order_detail", {"id": oid, "order_id": oid, "sku_id": sku,
+                              "sku_num": "1", "sku_name": f"sku-{sku}",
+                              "order_price": amt, "split_total_amount": amt,
+                              "create_time": ct}),
+        _cdc("payment_info", {"id": oid, "order_id": oid,
+                              "user_id": str(o["uid"]), "total_amount": amt,
+                              "subject": "order", "payment_type": "1102",
+                              "create_time": fmt_ts(o["p_ms"])}),
+        _cdc("favor_info", {"id": oid, "sku_id": sku, "ts": ts}),
+        _cdc("cart_info", {"id": oid, "sku_id": sku, "ts": ts}),
+        _cdc("comment_info", {"id": oid, "sku_id": sku,
+                              "appraise": ("1201", "1202")[o["oid"] % 2],
+                              "ts": ts}),
+        _cdc("refund_payment", {"id": oid, "order_id": oid, "sku_id": sku,
+                                "refund_amount": amt, "ts": ts}),
+    ]
+
+
 def dims_lines():
     """base_province CDC rows (routed to the dimension store)."""
     return [_cdc("base_province", {"id": str(i), "name": PROVINCES[i],
@@ -108,120 +206,30 @@ def dims_lines():
                  "ver": "1"}) for i in range(N_PROVINCES)]
 
 
-def ods_slices(seed, n_slices, t0_ms, params=None):
-    """Yield (k, t_lo, t_hi, log_lines, cdc_lines) for the first n_slices
-    slices of the timeline starting at t0_ms. Per-mid event times are
-    unique (the Bounce contract): each event of a slice owns a distinct
-    millisecond. Every slice carries rows for every product leg, spread
-    over the whole slice, so each leg's watermark passes the slice's first
-    windows on the slice's own data.
-    """
+def ods_backlog(seed, t0_ms, params=None):
+    """(log lines, CDC lines, span end) of the backlog starting at t0_ms.
+    Orders and their payments are spread over the whole span, so every
+    product leg's watermark passes the first windows on the data itself."""
     p = dict(ODS_DEFAULTS, **(params or {}))
-    user_cdf = zipf_cdf(p["users"], p["user_zipf"])
-    sku_cdf = zipf_cdf(p["skus"], p["sku_zipf"])
-    kw_cdf = zipf_cdf(p["keywords"], 1.0)
-    kinds = [k for k, _ in p["page_mix"]]
-    kind_cdf, acc = [], 0.0
-    for _, w in p["page_mix"]:
-        acc += w
-        kind_cdf.append(acc)
-    span, n_ev = p["slice_ms"], p["events_per_slice"]
-    step = span // n_ev
-    assert step >= 2, "slice too dense for unique per-event times"
-    for k in range(n_slices):
-        rng = random.Random(f"{seed}:ods:{k}")
-        t_lo = t0_ms + k * span
-        logs = []
-        for i in range(n_ev):
-            ts = t_lo + i * step + rng.randrange(step)
-            if rng.random() < p["new_user_share"]:
-                # first-time visitor: one entry page (UV + bounce fuel)
-                uid = 10_000_000 + k * n_ev + i
-                kind = "home"
-            else:
-                uid = zipf_draw(rng, user_cdf)
-                kind = kinds[bisect.bisect_left(kind_cdf,
-                                                rng.random() * acc)]
-            mid = f"m{uid}"
-            sku = str(1 + zipf_draw(rng, sku_cdf))
-            dur = rng.randrange(1000, 30000)
-            disp = None
-            if kind in ("home", "detail") and rng.random() < p["display_share"]:
-                disp = [{"display_type": "query",
-                         "item": str(1 + zipf_draw(rng, sku_cdf)),
-                         "item_type": "sku_id", "pos_id": j, "order": j + 1}
-                        for j in range(1 + rng.randrange(3))]
-            if kind == "start":
-                logs.append(_log_line(mid, uid, ts, start=True))
-            elif kind == "home":
-                logs.append(_log_line(mid, uid, ts, {
-                    "page_id": "home", "during_time": dur}, disp))
-            elif kind == "search":
-                w1 = zipf_draw(rng, kw_cdf)
-                w2 = zipf_draw(rng, kw_cdf)
-                logs.append(_log_line(mid, uid, ts, {
-                    "page_id": "good_list", "last_page_id": "search",
-                    "item": f"kw{w1} kw{w2}", "item_type": "keyword",
-                    "during_time": dur}))
-            else:
-                logs.append(_log_line(mid, uid, ts, {
-                    "page_id": "good_detail", "last_page_id": "home",
-                    "item": sku, "item_type": "sku_id",
-                    "during_time": dur}, disp))
-        cdc = []
-        # orders keep their payment (+30 s) inside the slice
-        o_span = max(span - 35_000, 1000)
-        for j in range(p["orders_per_slice"]):
-            oid = 1_000_000 + k * 10_000 + j
-            c_ms = t_lo + (j * o_span) // p["orders_per_slice"] + \
-                rng.randrange(max(o_span // p["orders_per_slice"], 1))
-            ct, pt = fmt_ts(c_ms), fmt_ts(c_ms + 30_000)
-            sku = str(1 + zipf_draw(rng, sku_cdf))
-            uid = zipf_draw(rng, user_cdf)
-            amt = f"{rng.randrange(100, 100_000) / 100:.2f}"
-            prov = str(rng.randrange(N_PROVINCES))
-            cdc.append(_cdc("order_info", {
-                "id": str(oid), "province_id": prov, "user_id": str(uid),
-                "order_status": "1001", "total_amount": amt,
-                "create_time": ct}))
-            cdc.append(_cdc("order_detail", {
-                "id": str(oid), "order_id": str(oid), "sku_id": sku,
-                "sku_num": "1", "sku_name": f"sku-{sku}",
-                "order_price": amt, "split_total_amount": amt,
-                "create_time": ct}))
-            cdc.append(_cdc("payment_info", {
-                "id": str(oid), "order_id": str(oid), "user_id": str(uid),
-                "total_amount": amt, "subject": "order",
-                "payment_type": "1102", "create_time": pt}))
-        n_f = p["facts_per_slice"]
-        for j in range(n_f):
-            fid = 5_000_000 + k * 10_000 + j
-            for table in ("favor_info", "cart_info", "comment_info",
-                          "refund_payment"):
-                ts = t_lo + (j * span) // n_f + rng.randrange(span // n_f)
-                sku = str(1 + zipf_draw(rng, sku_cdf))
-                after = {"id": str(fid), "sku_id": sku, "ts": str(ts)}
-                if table == "comment_info":
-                    after["appraise"] = rng.choice(("1201", "1202"))
-                if table == "refund_payment":
-                    after["order_id"] = str(fid)
-                    after["refund_amount"] = f"{rng.randrange(100, 9999) / 100:.2f}"
-                cdc.append(_cdc(table, after))
-        yield k, t_lo, t_lo + span, logs, cdc
+    span, n = p["slice_ms"], p["events_per_slice"]
+    logs = [log_line(e) for e in page_events(
+        random.Random(f"{seed}:ods:log"), n, t0_ms, span, p)]
+    cdc = [line for o in orders(random.Random(f"{seed}:ods:db"),
+                                round(n * p["orders_per_event"]), t0_ms,
+                                span, p, 1_000_000)
+           for line in cdc_lines(o)]
+    return logs, cdc, t0_ms + span
 
 
-def gen_ods(out_dir, seed, n_slices, t0_ms, params=None):
-    """Write `log/slice%04d.parquet`, `db/slice%04d.parquet` per slice and
-    `db/dims.parquet`; return the manifest (slice bounds and row counts)."""
+def gen_ods(out_dir, seed, t0_ms, params=None):
+    """Write `db/dims.parquet`, then `log/slice0000.parquet` and
+    `db/slice0000.parquet`; return the manifest (bounds and row counts)."""
     write_values(f"{out_dir}/db/dims.parquet", dims_lines())
-    slices = []
-    for k, lo, hi, logs, cdc in ods_slices(seed, n_slices, t0_ms, params):
-        write_values(f"{out_dir}/log/slice{k:04d}.parquet", logs)
-        write_values(f"{out_dir}/db/slice{k:04d}.parquet", cdc)
-        slices.append({"k": k, "lo": lo, "hi": hi, "log": len(logs),
-                       "db": len(cdc)})
-    man = {"slices": slices, "dims": N_PROVINCES,
-           "max_ts": slices[-1]["hi"] if slices else t0_ms}
+    logs, cdc, hi = ods_backlog(seed, t0_ms, params)
+    write_values(f"{out_dir}/log/slice0000.parquet", logs)
+    write_values(f"{out_dir}/db/slice0000.parquet", cdc)
+    man = {"lo": t0_ms, "hi": hi, "log": len(logs), "db": len(cdc),
+           "dims": N_PROVINCES}
     with open(f"{out_dir}/manifest.json", "w") as f:
         json.dump(man, f, sort_keys=True)
     return man
@@ -241,13 +249,16 @@ def write_horizon(sf_dir, max_ts_ms):
 # ----------------------------------------------------------------------
 
 DWS_DEFAULTS = dict(
-    days=5,
-    windows_per_day=24,    # 10 s windows per day that carry rows
-    dup_share=0.25,        # share of rows also written as a replay
-    files_per_day=2,       # sink files (micro-batches) per day and table
-    skus=200, keywords=80, top_n=5,
+    days=3,                # unverified: a multi-day history
+    events_per_day=3333,   # sf0.1 events: 100 000 over 30 days
+    dup_share=0.25,        # unverified: share of rows also written as a
+                           # replay or as a superseded version
+    files_per_day=2,       # unverified: sink files per day and table
+    top_n=5,               # unverified: rows per top-N answer
 )
 DAY0_MS = 1_700_006_400_000  # 2023-11-15 00:00:00 UTC, a day boundary
+WINDOW_MS = 10_000
+BOUNCE_MS = 10_000
 
 DWS_SCHEMAS = {
     "visitor": pa.schema([
@@ -272,54 +283,64 @@ DWS_SCHEMAS = {
         ("payment_amount", pa.decimal128(38, 2)),
         ("paid_order_ct", pa.int64()), ("_ver", pa.int64())]),
 }
-
-
-def _cents(c):
-    return f"{c // 100}.{c % 100:02d}"
-
-
-def _dws_rows(rng, table, stt, edt, p):
-    """Rows of one closed window, as dicts (amounts in integer cents)."""
-    if table == "visitor":
-        return [{"stt": stt, "edt": edt, "vc": vc, "ch": ch, "ar": ar,
-                 "is_new": isn, "uv_ct": rng.randrange(0, 5),
-                 "pv_ct": rng.randrange(1, 40), "sv_ct": rng.randrange(0, 6),
-                 "uj_ct": rng.randrange(0, 4),
-                 "dur_sum": rng.randrange(1000, 900_000)}
-                for vc in ("v1", "v2") for ch in ("web", "app")
-                for ar in ("1", "2") for isn in ("0", "1")
-                if rng.random() < 0.7]
-    if table == "province":
-        return [{"stt": stt, "edt": edt, "province_id": i,
-                 "province_name": PROVINCES[i],
-                 "province_area_code": str(100 + i),
-                 "province_iso_code": f"ISO-{i}",
-                 "order_count": rng.randrange(1, 9),
-                 "order_amount": rng.randrange(100, 2_000_000)}
-                for i in sorted(rng.sample(range(N_PROVINCES), 8))]
-    if table == "keyword":
-        return [{"stt": stt, "edt": edt, "word": f"kw{w}", "source": "search",
-                 "ct": rng.randrange(1, 20)}
-                for w in sorted(rng.sample(range(p["keywords"]), 12))]
-    return [{"stt": stt, "edt": edt, "sku_id": s,
-             "click_ct": rng.randrange(0, 30),
-             "display_ct": rng.randrange(0, 60),
-             "favor_ct": rng.randrange(0, 4), "cart_ct": rng.randrange(0, 4),
-             "order_amount": rng.randrange(0, 500_000),
-             "order_ct": rng.randrange(0, 5),
-             "payment_amount": rng.randrange(0, 500_000),
-             "paid_order_ct": rng.randrange(0, 5)}
-            for s in sorted(rng.sample(range(1, p["skus"] + 1), 15))]
-
-
 DWS_KEYS = {
     "visitor": ("stt", "edt", "vc", "ch", "ar", "is_new"),
     "province": ("stt", "edt", "province_id", "province_name",
                  "province_area_code", "province_iso_code"),
-    "keyword": ("stt", "edt", "word"),
+    "keyword": ("stt", "edt", "word", "source"),
     "product": ("stt", "edt", "sku_id"),
 }
 AMOUNT_COLS = {"order_amount", "payment_amount"}
+
+
+def dws_windows(events, order_rows):
+    """Window rows {table: {key: measures}} of one day's ODS process, as
+    the DWS layer aggregates it: a page is an entry when it has no last
+    page (home and detail here), a unique visit when it is the mid's first
+    entry of the day, a bounce (user jump) when the mid's next page comes
+    more than 10 s later or never."""
+    out = {t: {} for t in DWS_KEYS}
+
+    def win(ms):
+        s = ms - ms % WINDOW_MS
+        return fmt_ts(s), fmt_ts(s + WINDOW_MS)
+
+    def add(table, key, **m):
+        r = out[table].setdefault(key, {})
+        for c, v in m.items():
+            r[c] = r.get(c, 0) + v
+
+    pages = [e for e in events if e["kind"] != "start"]
+    nxt, seen = {}, set()
+    for e in reversed(pages):
+        e["_next"] = nxt.get(e["uid"])
+        nxt[e["uid"]] = e["ts"]
+    for e in pages:
+        w = win(e["ts"])
+        entry = e["kind"] != "search"
+        uv = entry and e["uid"] not in seen
+        if uv:
+            seen.add(e["uid"])
+        jump = entry and (e["_next"] is None
+                          or e["_next"] - e["ts"] > BOUNCE_MS)
+        add("visitor", w + ("v1", e["ch"], "1", "0"), uv_ct=int(uv),
+            pv_ct=1, sv_ct=int(entry), uj_ct=int(jump), dur_sum=e["dur"])
+        if e["kind"] == "search":
+            add("keyword", w + (e["item"], "search"), ct=1)
+        elif e["kind"] == "detail":
+            add("product", w + (int(e["item"]),), click_ct=1)
+        for s in e.get("displays", ()):
+            add("product", w + (int(s),), display_ct=1)
+    for o in order_rows:
+        w = win(o["c_ms"])
+        i = o["prov"]
+        add("province", w + (i, PROVINCES[i], str(100 + i), f"ISO-{i}"),
+            order_count=1, order_amount=o["amt"])
+        add("product", w + (o["sku"],), favor_ct=1, cart_ct=1,
+            order_amount=o["amt"], order_ct=1)
+        add("product", win(o["p_ms"]) + (o["sku"],),
+            payment_amount=o["amt"], paid_order_ct=1)
+    return out
 
 
 def expected_answers(latest, top_n):
@@ -373,49 +394,56 @@ def expected_answers(latest, top_n):
 
 
 def gen_dws(out_dir, seed, params=None):
-    """Write `<table>/part-%05d.parquet` sink files and `expected.json`."""
+    """Write `<table>/part-%05d.parquet` sink files and `expected.json`.
+    Each day's windows are split over `files_per_day` files in time order
+    (file f carries `_ver` = day * files_per_day + f + 1). A `dup_share`
+    of the rows is also written once more: half as an exact replay, half
+    as a superseded lower `_ver` holding half of each measure (an earlier,
+    partial firing of the window) in the file before."""
     p = dict(DWS_DEFAULTS, **(params or {}))
-    rng = random.Random(f"{seed}:dws")
-    latest = {}
+    ods = dict(ODS_DEFAULTS, **(params or {}))
+    nf = p["files_per_day"]
+    files = {t: [] for t in DWS_KEYS}
+    latest = {t: [] for t in DWS_KEYS}
     days = []
-    for table in ("visitor", "province", "keyword", "product"):
-        files, rows_latest, ver = [], [], 0
-        for d in range(p["days"]):
-            day0 = DAY0_MS + d * 86_400_000
-            if table == "visitor":
-                days.append(fmt_ts(day0)[:10].replace("-", ""))
-            slots = sorted(rng.sample(range(8640), p["windows_per_day"]))
-            per_file = [[] for _ in range(p["files_per_day"])]
-            for i, slot in enumerate(slots):
-                stt = fmt_ts(day0 + slot * 10_000)
-                edt = fmt_ts(day0 + slot * 10_000 + 10_000)
-                f = i * p["files_per_day"] // len(slots)
-                for r in _dws_rows(rng, table, stt, edt, p):
-                    v = ver + f + 1
-                    if rng.random() < p["dup_share"]:
-                        if rng.random() < 0.5:
-                            # replayed batch: same version, same values
-                            per_file[f].append(dict(r, _ver=v))
-                        else:
-                            # superseded version with different measures
-                            old = (_dws_rows(rng, table, stt, edt, p)
-                                   or [r])[0]
-                            stale = dict(r, _ver=v - 1)
-                            for c in old:
-                                if c not in DWS_KEYS[table]:
-                                    stale[c] = old[c]
-                            per_file[max(f - 1, 0)].append(stale)
-                    per_file[f].append(dict(r, _ver=v))
-                    rows_latest.append(r)
-            files.extend(per_file)
-            ver += p["files_per_day"]
-        latest[table] = rows_latest
+    for d in range(p["days"]):
+        day0 = DAY0_MS + d * 86_400_000
+        days.append(fmt_ts(day0)[:10].replace("-", ""))
+        n = p["events_per_day"]
+        wins = dws_windows(
+            page_events(random.Random(f"{seed}:dws:{d}:log"), n, day0,
+                        86_400_000, ods),
+            orders(random.Random(f"{seed}:dws:{d}:db"),
+                   round(n * ods["orders_per_event"]), day0, 86_400_000,
+                   ods, 1_000_000 + d * 100_000))
+        for table, keyed in wins.items():
+            rng = random.Random(f"{seed}:dws:{d}:{table}")
+            cols = DWS_SCHEMAS[table].names
+            per_file = [[] for _ in range(nf)]
+            for key in sorted(keyed):
+                r = dict(zip(DWS_KEYS[table], key))
+                r.update({c: keyed[key].get(c, 0) for c in cols
+                          if c not in r and c != "_ver"})
+                hh, mm, ss = r["stt"][11:].split(":")
+                f = ((int(hh) * 60 + int(mm)) * 60 + int(ss)) * nf // 86_400
+                v = d * nf + f + 1
+                if rng.random() < p["dup_share"]:
+                    if rng.random() < 0.5:
+                        per_file[f].append(dict(r, _ver=v))
+                    else:
+                        stale = {c: (x if c in DWS_KEYS[table] else x // 2)
+                                 for c, x in r.items()}
+                        per_file[max(f - 1, 0)].append(dict(stale, _ver=v - 1))
+                per_file[f].append(dict(r, _ver=v))
+                latest[table].append(r)
+            files[table].extend(per_file)
+    for table, table_files in files.items():
         schema = DWS_SCHEMAS[table]
         os.makedirs(f"{out_dir}/{table}", exist_ok=True)
-        for i, rows in enumerate(files):
+        for i, rows in enumerate(table_files):
             cols = {}
             for field in schema:
-                vals = [r.get(field.name) for r in rows]
+                vals = [r[field.name] for r in rows]
                 if field.name in AMOUNT_COLS:
                     vals = [Decimal(v).scaleb(-2) for v in vals]
                 cols[field.name] = pa.array(vals, field.type)
@@ -433,71 +461,50 @@ def gen_dws(out_dir, seed, params=None):
 # ----------------------------------------------------------------------
 
 DOC_DEFAULTS = dict(
-    docs=600,
-    core_words=20,         # common vocabulary, drawn uniformly
-    vocab_pool=20_000,     # Zipf pool beyond it: the open-vocabulary tail
-    zipf_s=1.07,
-    tail_share=0.02,       # tail-word share in a clean document
-    noisy_share=0.3,       # documents with a heavy tail (LM filter fuel)
-    noisy_tail_share=0.3,
-    min_words=30, max_words=70,
-    exact_dup_rate=0.01,
-    near_dup_rate=0.04,    # ~3 words mutated: inside the MinHash band
-    langs=(("en", 0.4), ("zh", 0.15), ("es", 0.15), ("de", 0.15),
-           ("fr", 0.15)),
-    stopword_share=0.03,
-    pii_share=0.05,        # docs carrying an email/phone/ip to scrub
+    docs=2500,                 # unverified: half of sf0.1's 5000 rows, to
+                               # fit the run budget
+    min_words=10, max_words=100,  # sf0.1 documents: 10-100, uniform
+    # sf0.1 documents: documents per language; sources src0-src19 hold
+    # 250 documents each
+    lang_counts=(("de", 702), ("en", 2059), ("es", 744), ("fr", 742),
+                 ("zh", 753)),
+    sources=20,
+    core_words=31,             # sf0.1 documents: a closed 31-word vocabulary
+    # unverified: the share of words from the rehearsal's open-vocabulary
+    # Zipf tail. It sets how many documents pass the LM filter (CE <= 3.45):
+    # at 0.002 about 56-62 % do (0.005: ~48 %, 0.01: ~16 %, 0.015: < 1 %),
+    # so dedup, mixing and packing work on over a thousand survivors, a
+    # count that stays within 2 % from seed to seed
+    tail_share=0.002,
 )
-STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "that", "for")
 
 
 def gen_docs(path, seed, params=None):
-    """Write the `documents` table (doc_id, text, lang, source, n_chars)."""
+    """Write the `documents` table (doc_id, text, lang, source, n_chars)
+    with the rehearsal's corpus process, whose word draw here is a core
+    word with probability 1 - tail_share and a Zipf tail word otherwise."""
     p = dict(DOC_DEFAULTS, **(params or {}))
     rng = random.Random(f"{seed}:docs")
-    cdf = zipf_cdf(p["vocab_pool"], p["zipf_s"])
-    langs = [l for l, _ in p["langs"]]
-    lang_cdf, acc = [], 0.0
-    for _, w in p["langs"]:
-        acc += w
-        lang_cdf.append(acc)
-    n = p["docs"]
+    tail = rehearsal.zipf_sampler(rng, rehearsal.VOCAB_POOL,
+                                  rehearsal.ZIPF_S)
+    core = p["core_words"]
 
-    def word(tail):
-        r = rng.random()
-        if r < p["stopword_share"]:
-            return rng.choice(STOPWORDS)
-        if r < p["stopword_share"] + tail:
-            return f"w{p['core_words'] + zipf_draw(rng, cdf)}"
-        return f"w{rng.randrange(p['core_words'])}"
+    def draw():
+        if rng.random() < p["tail_share"]:
+            return core + tail()
+        return rng.randrange(core)
 
-    texts, dl = [], []
-    for _ in range(n):
-        tail = (p["noisy_tail_share"] if rng.random() < p["noisy_share"]
-                else p["tail_share"])
-        words = [word(tail) for _ in range(rng.randint(p["min_words"],
-                                                       p["max_words"]))]
-        if rng.random() < p["pii_share"]:
-            words.insert(rng.randrange(len(words)), rng.choice((
-                f"user{rng.randrange(999)}@mail.example.com",
-                f"555-{rng.randrange(100, 999)}-{rng.randrange(1000, 9999)}",
-                f"10.0.{rng.randrange(255)}.{rng.randrange(255)}")))
-        texts.append(" ".join(words) + " ")
-        dl.append(langs[bisect.bisect_left(lang_cdf, rng.random() * acc)])
-    for _ in range(int(n * p["exact_dup_rate"])):
-        texts[rng.randrange(n)] = texts[rng.randrange(n)]
-    for _ in range(int(n * p["near_dup_rate"])):
-        words = texts[rng.randrange(n)].split()
-        for _ in range(min(3, len(words))):
-            words[rng.randrange(len(words))] = word(p["tail_share"])
-        texts[rng.randrange(n)] = " ".join(words) + " "
+    langsrc = [(lang, f"src{s}") for lang, c in p["lang_counts"]
+               for s in range(p["sources"]) for _ in range(c)]
+    texts, langs, sources = rehearsal.gen_corpus(
+        rng, p["docs"], list(range(p["min_words"], p["max_words"] + 1)),
+        langsrc, draw)
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     pq.write_table(pa.table({
-        "doc_id": pa.array(range(n), pa.int64()),
+        "doc_id": pa.array(range(len(texts)), pa.int64()),
         "text": pa.array(texts, pa.string()),
-        "lang": pa.array(dl, pa.string()),
-        "source": pa.array([("web", "books", "code")[i % 3]
-                            for i in range(n)], pa.string()),
+        "lang": pa.array(langs, pa.string()),
+        "source": pa.array(sources, pa.string()),
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     }), path)
-    return {"docs": n}
+    return {"docs": len(texts)}

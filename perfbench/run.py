@@ -34,15 +34,12 @@ import stats  # noqa: E402
 GEN_REPEATS = 3
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
 
-# Run shape per workload (see README.md); generator parameters are the
-# defaults in gen.py.
-CATCHUP_SLICES = 1
-ADS = dict(clients=1, warm_clients=min(CPUS, 4), warm_requests=12,
-           min_requests=24)
+# Generator parameters are the defaults in gen.py; the ADS run shape is
+# in PerfBench.scala.
 T0_MS = 1_700_000_000_000  # 2023-11-14 22:13:20 UTC: timeline origin
 
-END_TO_END = ("setup_s", "items_per_s", "p50_ms", "heap_live_peak_mb")
-UNITS = {"setup_s": "s", "items_per_s": "1/s", "p50_ms": "ms",
+END_TO_END = ("setup_s", "items_per_s", "latency_ms", "heap_live_peak_mb")
+UNITS = {"setup_s": "s", "items_per_s": "1/s", "latency_ms": "ms",
          "heap_live_peak_mb": "MB"}
 LAYERS = ("dwd.base_log", "dwd.base_db", "dwm.unique_visit", "dwm.user_jump",
           "dwm.order_wide", "dwm.payment_wide", "dws.visitor",
@@ -98,8 +95,8 @@ def tree_bytes(d):
 def generate(workload, seed, dst):
     """Write the workload's inputs under dst; returns generator facts."""
     if workload == "wh_catchup":
-        man = gen.gen_ods(f"{dst}/backlog", seed, CATCHUP_SLICES, T0_MS)
-        gen.write_horizon(f"{dst}/sf", man["max_ts"])
+        man = gen.gen_ods(f"{dst}/backlog", seed, T0_MS)
+        gen.write_horizon(f"{dst}/sf", man["hi"])
         return {"manifest": man}
     if workload == "ads_dashboard":
         exp = gen.gen_dws(f"{dst}/ads/dws", seed)
@@ -112,14 +109,14 @@ def generate(workload, seed, dst):
     raise HarnessError(f"unknown workload {workload}")
 
 
-def run_jvm(params, work, deadline):
+def run_jvm(out, params, work, deadline):
     props = os.path.join(work, "params.properties")
     with open(props, "w") as f:
         for k, v in params.items():
             f.write(f"{k}={v}\n")
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    cmd = build.java_cmd(tmp, build.archive_flag()) + [props]
+    cmd = build.java_cmd(out, tmp, build.archive_flag(out)) + [props]
     env = dict(os.environ)
     env.pop("SPARK_LOCAL_DIRS", None)  # keep Spark's local files in the work dir
     jlog = os.path.join(work, "jvm.log")
@@ -153,72 +150,62 @@ def pct(samples, q, what):
 # ---------------------------------------------------------------------
 
 def reduce_catchup(res, facts, trace):
-    """items: ODS records per second of catch-up. Every record of a
-    repetition is complete when drainAll returns, so its latency is the
-    repetition's wall. One operation per (repetition, slice); it fails if a
-    DWS table never shows a window of the slice or a check fails."""
+    """items: ODS records per second of catch-up. Every record is complete
+    when drainAll returns, so the latency is the catch-up wall. One
+    operation, the catch-up; it fails if a check of the chain failed or a
+    DWS table holds no window of the backlog."""
     man = facts["manifest"]
-    bounds = [(s["lo"], s["hi"]) for s in man["slices"]]
-    records = sum(s["log"] + s["db"] for s in man["slices"]) + man["dims"]
-    walls, visible, failed, attempted = [], [], 0, 0
-    arrivals = {label: [] for label in LAG_TOPICS + stats.DWS}
-    for rep in res["reps"]:
-        start = rep["start_ms"]
-        walls.append((rep["end_ms"] - start) / 1000.0)
-        bad = set(range(len(bounds))) if rep["failed_checks"] else set()
-        if rep["failed_checks"]:
-            log(f"equivalence/non-empty checks failed: {rep['failed_checks']}")
-        for t in stats.DWS:
-            files = stats.read_dws(rep["dir"], t)
-            visible += [v - start for v in
-                        stats.first_window_visible(files).values()]
-            first = stats.first_arrival(files, bounds)
-            bad |= set(range(len(bounds))) - set(first)
-            arrivals[t] += [v - start for v in first.values()]
-        if trace:
-            for label in LAG_TOPICS:
-                first = stats.first_arrival(
-                    stats.read_topic(rep["dir"], label), bounds)
-                arrivals[label] += [v - start for v in first.values()]
-        attempted += len(bounds)
-        failed += len(bad)
-    wall = stats.median(walls)
-    m = {"items_per_s": records / wall,
-         "p50_ms": pct([w * 1000 for w in walls for _ in range(records)],
-                       0.5, "catch-up")}
+    records = man["log"] + man["db"] + man["dims"]
+    start = res["start_ms"]
+    wall = (res["end_ms"] - start) / 1000.0
+    problems = list(res["failed_checks"])
+
+    def lags(files):
+        """ms from Warehouse.start until each window of the backlog first
+        arrived."""
+        return [v - start for w, v in stats.first_arrival(files).items()
+                if man["lo"] <= w < man["hi"]]
+
+    arrivals = {t: lags(stats.read_dws(res["dir"], t)) for t in stats.DWS}
+    problems += [f"dws {t}: no window of the backlog" for t in stats.DWS
+                 if not arrivals[t]]
+    for p in problems:
+        log(f"catch-up check failed: {p}")
+    m = {"items_per_s": records / wall, "latency_ms": wall * 1000}
     named = {"catchup_events_per_s": (m["items_per_s"], "1/s"),
-             "catchup_s": (wall, "s"), "repetitions": (len(walls), "count")}
+             "catchup_s": (wall, "s")}
+    visible = [x for t in stats.DWS for x in arrivals[t]]
     vis = stats.percentile(visible, 0.5)
     if vis is not None:
         named["window_visible_p50_s"] = (vis / 1000, "s")
         named["windows"] = (len(visible), "count")
     layer = {}
     if trace:
-        reps = res["reps"]
-        layer["wh.start_s"] = stats.median(
-            [(r["started_ms"] - r["start_ms"]) / 1000 for r in reps])
-        layer["wh.drain_s"] = stats.median(
-            [(r["end_ms"] - r["started_ms"]) / 1000 for r in reps])
-        layer["wh.gate_s"] = stats.median([r["gate_s"] for r in reps])
+        layer["wh.start_s"] = (res["started_ms"] - start) / 1000
+        layer["wh.drain_s"] = (res["end_ms"] - res["started_ms"]) / 1000
+        layer["wh.gate_s"] = res["gate_s"]
         for label in LAG_TOPICS:
-            layer[f"lag.{label}_p50_s"] = (stats.median(arrivals[label])
-                                           or 0) / 1000
+            xs = lags(stats.read_topic(res["dir"], label))
+            layer[f"lag.{label}_p50_s"] = (stats.median(xs) or 0) / 1000
         for t in stats.DWS:
             layer[f"lag.dws_{t}_p50_s"] = (stats.median(arrivals[t])
                                            or 0) / 1000
-    return m, named, attempted, failed, layer
+    return m, named, 1, 1 if problems else 0, layer
 
 
 def reduce_ads(res, facts, trace):
     lat = res["latencies_ms"]
     m = {"items_per_s": res["attempted"] / res["wall_s"],
-         "p50_ms": pct(lat, 0.5, "ads latency")}
-    named = {"ads_p50_ms": (m["p50_ms"], "ms"),
+         "latency_ms": pct(lat, 0.5, "ads latency")}
+    named = {"ads_p50_ms": (m["latency_ms"], "ms"),
              "ads_rps": (m["items_per_s"], "1/s"),
              "requests": (len(lat), "count")}
-    p90 = stats.percentile(lat, 0.9)
-    if p90 is not None:
-        named["ads_p90_ms"] = (p90, "ms")
+    # the highest of these percentiles with ten samples beyond it
+    for q in (0.9, 0.75):
+        v = stats.percentile(lat, q)
+        if v is not None:
+            named[f"ads_p{round(q * 100)}_ms"] = (v, "ms")
+            break
     for what in ("errors", "mismatches"):
         if res[what]:
             log(f"ads {what}: {res[what]}")
@@ -230,9 +217,9 @@ def reduce_ads(res, facts, trace):
     return m, named, res["attempted"], res["failed"], layer
 
 
-def oracle_check(work, outputs):
-    """Every curate output equals the x_curation_e2e DuckDB oracle on the
-    generated corpus; returns a list of problems."""
+def oracle_check(work, output):
+    """The curate output equals the x_curation_e2e DuckDB oracle on the
+    generated corpus; returns (problems, rows the oracle keeps)."""
     import duckdb
     import pyarrow.parquet as pq
     con = duckdb.connect()
@@ -249,30 +236,28 @@ def oracle_check(work, outputs):
     problems = []
     if not want:
         problems.append("oracle kept no documents")
-    for o in outputs:
-        got = pq.read_table(o)
-        if sorted(got.column_names) != cols:
-            problems.append(f"{o}: columns {got.column_names}")
-            continue
+    got = pq.read_table(output)
+    if sorted(got.column_names) != cols:
+        problems.append(f"columns {got.column_names}")
+    else:
         got = got.select(cols).sort_by("doc_id").to_pylist()
         if got != want:
             diff = next((i for i, (a, b) in enumerate(zip(got, want))
                          if a != b), min(len(got), len(want)))
-            problems.append(f"{os.path.basename(o)}: {len(got)} vs "
-                            f"{len(want)} rows, first difference at {diff}")
+            problems.append(f"{len(got)} vs {len(want)} rows, first "
+                            f"difference at {diff}")
     return problems, len(want)
 
 
 def reduce_curate(res, facts, trace, work):
-    docs = facts["docs"]
-    walls = res["walls_s"]
-    samples = [w * 1000 for w in walls for _ in range(docs)]
-    m = {"items_per_s": docs / stats.median(walls),
-         "p50_ms": pct(samples, 0.5, "curate")}
+    """items: input documents per second of the one curate call; the
+    latency is the call's wall. One operation, checked by the oracle."""
+    docs, wall = facts["docs"], res["wall_s"]
+    m = {"items_per_s": docs / wall, "latency_ms": wall * 1000}
     named = {"curate_docs_per_s": (m["items_per_s"], "1/s"),
-             "calls": (len(walls), "count")}
-    problems, kept = oracle_check(work, res["outputs"])
-    log(f"curate: {kept} documents kept by the oracle, {len(walls)} calls")
+             "curate_s": (wall, "s")}
+    problems, kept = oracle_check(work, res["output"])
+    log(f"curate: {kept} documents kept by the oracle")
     for p in problems:
         log(f"curate oracle mismatch: {p}")
     return m, named, 1, 1 if problems else 0, {}
@@ -280,10 +265,9 @@ def reduce_curate(res, facts, trace, work):
 
 # ---------------------------------------------------------------------
 
-def run(workload, seed, seconds, trace, started):
-    deadline = started + 170
-    work = os.path.join(build.build_dir(), "work",
-                        f"{workload}-{seed}-t{trace}")
+def run(out, workload, seed, seconds, trace):
+    deadline = time.time() + 170
+    work = os.path.join(out, "work", f"{workload}-{seed}-t{trace}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     failed_setup = []
@@ -312,16 +296,12 @@ def run(workload, seed, seconds, trace, started):
         params.update(dws_root=f"{inputs}/ads",
                       expected_tsv=f"{inputs}/expected.tsv",
                       days=",".join(facts["expected"]["days"]),
-                      top_n=facts["expected"]["top_n"],
-                      clients=ADS["clients"],
-                      warm_clients=ADS["warm_clients"],
-                      warm_requests=ADS["warm_requests"],
-                      min_requests=ADS["min_requests"])
+                      top_n=facts["expected"]["top_n"])
     else:
         params.update(corpus=f"{inputs}/corpus.parquet")
 
     launch = time.time()
-    res = run_jvm(params, work, deadline)
+    res = run_jvm(out, params, work, deadline)
     setup_s = (stats.median(gen_s) + (res["session_ready_ms"] / 1000 - launch)
                + res["warmup_s"])
     if workload == "wh_catchup":
@@ -358,15 +338,16 @@ def main(argv=None):
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     a = ap.parse_args(argv)
-    started = time.time()
+    out, build_s = build.build()
+    if build_s:
+        log(f"built {out} in {build_s:.1f} s")
     try:
-        build.build()
-        m, att, fail, layer = run(a.workload, a.seed, a.seconds, a.trace,
-                                  started)
+        m, att, fail, layer = run(out, a.workload, a.seed, a.seconds,
+                                  a.trace)
     except HarnessError as e:
         print(f"perfbench: {e}", file=sys.stderr)
         return 2
-    cache = os.path.join(build.build_dir(), "perfbench", "results")
+    cache = os.path.join(out, "results")
     os.makedirs(cache, exist_ok=True)
     key = os.path.join(cache, f"{a.workload}-{a.seed}-{a.seconds:g}")
     if a.trace:
@@ -375,8 +356,8 @@ def main(argv=None):
             with open(key + ".json") as f:
                 base = json.load(f)
         if base is None:
-            log("trace overhead: no untraced run of this seed and length in "
-                "this checkout yet")
+            log("trace overhead: no untraced run of this seed and length "
+                "with this build yet")
         else:
             log("trace overhead (traced - untraced, same seed): " + " ".join(
                 f"{k}={m[k] - base[k]:+.4f} {UNITS[k]}" for k in END_TO_END))

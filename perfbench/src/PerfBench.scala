@@ -95,17 +95,15 @@ object PerfBench {
     val tracer = if (p("trace") == "1") Some(new Tracer(spark, cpus)) else None
     val cpu0 = HostProbe.cpuSample()
     val t0 = System.nanoTime()
-    val heap = mutable.ArrayBuffer.empty[Double]
     try p("workload") match {
-      case "wh_catchup" => whCatchup(spark, p, out, tracer, heap)
-      case "ads_dashboard" => adsDashboard(spark, p, out, tracer, heap)
-      case "curate_batch" => curateBatch(spark, p, out, tracer, heap)
+      case "wh_catchup" => whCatchup(spark, p, out, tracer)
+      case "ads_dashboard" => adsDashboard(spark, p, out, tracer)
+      case "curate_batch" => curateBatch(spark, p, out, tracer)
       case w => sys.error(s"unknown workload $w")
     } finally {
       out("host_other_cores") = HostProbe.otherCores(cpu0, HostProbe.cpuSample(),
         (System.nanoTime() - t0) / 1e9)
       out("host_io_mbps") = HostProbe.ioProbeMbps()
-      out("heap_live_peak_mb") = if (heap.isEmpty) 0.0 else heap.max
       tracer.foreach { t =>
         out("engine") = t.engineMetrics().toMap
         t.stop()
@@ -143,9 +141,9 @@ object PerfBench {
   private def stopAll(qs: Map[String, StreamingQuery]): Unit =
     qs.values.foreach(q => try q.stop() catch { case _: Throwable => () })
 
-  /** Copy a generated backlog into a fresh layout's ODS topics, with file
-    * mtimes in slice order (dims first): the file source replays them one
-    * file per trigger, oldest first. */
+  /** Copy a generated backlog into a fresh layout's ODS topics, the dims
+    * file a minute older than the facts: with one file per trigger the db
+    * source replays the dims first, as the reference preloads them. */
   private def stageBacklog(backlog: String, lay: Warehouse.Layout): Unit = {
     val base = now() - 3600000L
     def put(src: Path, topic: String, mtime: Long): Unit = {
@@ -155,50 +153,39 @@ object PerfBench {
       dst.toFile.setLastModified(mtime)
     }
     put(Paths.get(backlog, "db", "dims.parquet"), OdsDb, base - 60000L)
-    Seq("log" -> OdsLog, "db" -> OdsDb).foreach { case (sub, topic) =>
-      Files.list(Paths.get(backlog, sub)).iterator().asScala.toSeq
-        .filter(_.getFileName.toString.startsWith("slice")).sorted
-        .zipWithIndex.foreach { case (f, i) => put(f, topic, base + i * 1000L) }
-    }
+    put(Paths.get(backlog, "log", "slice0000.parquet"), OdsLog, base)
+    put(Paths.get(backlog, "db", "slice0000.parquet"), OdsDb, base)
   }
 
   private val OdsOptions = Map("maxFilesPerTrigger" -> "1")
 
   /** Catch-up after a restart: a fresh JVM starts the whole chain on a
-    * backlog already on disk and drains it. The timed region is exactly
-    * `Warehouse.start` → `drainAll` returning with every window closed.
-    * The first repetition runs on a cold JVM, as a restart does; further
-    * ones (each on a fresh layout) only fit in long measured times. */
+    * backlog already on disk and drains it, once. The timed region is
+    * exactly `Warehouse.start` → `drainAll` returning with every window
+    * closed; the checks run after it. */
   def whCatchup(spark: SparkSession, p: Params, out: Out,
-      tracer: Option[Tracer], heap: mutable.Buffer[Double]): Unit = {
-    val work = p("work")
-    val reps = mutable.ArrayBuffer.empty[Map[String, Any]]
+      tracer: Option[Tracer]): Unit = {
     out("warmup_s") = 0.0
-    val m0 = now()
-    var last = 0L
-    // another repetition only if it should end inside the measured time
-    while (reps.isEmpty || now() - m0 + last <= p.dbl("seconds") * 1000) {
-      val lay = Warehouse.Layout(s"$work/rep${reps.size}")
-      stageBacklog(p("backlog"), lay)
-      tracer.foreach(_.open())
-      val s = now()
-      val qs = Warehouse.start(spark, lay, OdsOptions)
-      val started = now()
-      try Warehouse.drainAll(spark, p("sf"), lay, qs)
-      catch { case e: Throwable => stopAll(qs); throw e }
-      val e = now()
-      last = e - s
-      tracer.foreach { t => t.close(); t.endRep(qs) }
-      heap += liveHeapMb()
-      stopAll(qs)
-      val g0 = now()
-      val failedChecks = checkChain(spark, lay)
-      reps += Map("dir" -> lay.root, "start_ms" -> s, "started_ms" -> started,
-        "end_ms" -> e, "gate_s" -> (now() - g0) / 1000.0,
-        "failed_checks" -> failedChecks)
-    }
-    out("reps") = reps
-    tracer.foreach(t => out("queries") = t.queryMetrics(Layers, reps.size).toMap)
+    val lay = Warehouse.Layout(s"${p("work")}/chain")
+    stageBacklog(p("backlog"), lay)
+    tracer.foreach(_.open())
+    val s = now()
+    val qs = Warehouse.start(spark, lay, OdsOptions)
+    val started = now()
+    try Warehouse.drainAll(spark, p("sf"), lay, qs)
+    catch { case e: Throwable => stopAll(qs); throw e }
+    val e = now()
+    tracer.foreach { t => t.close(); t.finish(qs) }
+    out("heap_live_peak_mb") = liveHeapMb()
+    stopAll(qs)
+    val g0 = now()
+    out("failed_checks") = checkChain(spark, lay)
+    out("gate_s") = (now() - g0) / 1000.0
+    out("dir") = lay.root
+    out("start_ms") = s
+    out("started_ms") = started
+    out("end_ms") = e
+    tracer.foreach(t => out("queries") = t.queryMetrics(Layers).toMap)
   }
 
   // --------------------------------------------------------------------
@@ -241,8 +228,15 @@ object PerfBench {
 
   val Endpoints = Seq("gmv", "visitor", "province", "keyword", "product")
 
+  /** The ADS run shape: one closed-loop client issues WarmRequests
+    * unmeasured requests, the steepest part of the JIT's warm-up, then
+    * requests for the measured time and at least MinRequests of them, so
+    * that p50 and p75 each have ten samples beyond them. */
+  val WarmRequests = 30
+  val MinRequests = 40
+
   def adsDashboard(spark: SparkSession, p: Params, out: Out,
-      tracer: Option[Tracer], heap: mutable.Buffer[Double]): Unit = {
+      tracer: Option[Tracer]): Unit = {
     val lay = Warehouse.Layout(p("dws_root"))
     val topN = p.int("top_n")
     val days = p("days").split(",").toSeq
@@ -250,45 +244,31 @@ object PerfBench {
       .map(_.split("\t", 2)).map(a => a(0) -> (if (a.length > 1) a(1) else "")).toMap
     final case class Req(ep: String, day: String, ns: Long, answer: String,
         error: String)
-    val seed = p("seed").toLong
-    /** `clients` closed-loop threads issuing requests until the deadline
-      * has passed and at least `minRequests` were made; every request is
-      * recorded. */
-    def closedLoop(clients: Int, seconds: Double, stream: Int,
-        minRequests: Int): (Seq[Req], Double) = {
-      val results = new java.util.concurrent.ConcurrentLinkedQueue[Req]()
-      val t0 = System.nanoTime()
-      val deadline = t0 + (seconds * 1e9).toLong
-      val threads = (0 until clients).map { c =>
-        val th = new Thread(() => {
-          val rng = new scala.util.Random(seed * 1000003L + stream * 101 + c)
-          var i = c
-          while (System.nanoTime() < deadline || results.size < minRequests) {
-            // endpoints in rotation (an even mix at any run length), days
-            // at random
-            val ep = Endpoints(i % Endpoints.size)
-            i += 1
-            val d = days(rng.nextInt(days.size))
-            val s = System.nanoTime()
-            val r =
-              try Req(ep, d, 0L, render(endpoint(spark, lay, ep, d, topN)), null)
-              catch { case e: Throwable => Req(ep, d, 0L, null, e.toString) }
-            results.add(r.copy(ns = System.nanoTime() - s))
-          }
-        })
-        th.start(); th
-      }
-      threads.foreach(_.join())
-      (results.asScala.toSeq, (System.nanoTime() - t0) / 1e9)
+    // endpoints in rotation (an even mix at any run length), days at random
+    val rng = new scala.util.Random(p("seed").toLong)
+    var i = 0
+    def request(): Req = {
+      val ep = Endpoints(i % Endpoints.size)
+      i += 1
+      val d = days(rng.nextInt(days.size))
+      val s = System.nanoTime()
+      val r =
+        try Req(ep, d, 0L, render(endpoint(spark, lay, ep, d, topN)), null)
+        catch { case e: Throwable => Req(ep, d, 0L, null, e.toString) }
+      r.copy(ns = System.nanoTime() - s)
     }
     val w0 = now()
-    val (warm, _) = closedLoop(p.int("warm_clients"), 0, 1, p.int("warm_requests"))
+    val warm = Seq.fill(WarmRequests)(request())
     out("warmup_s") = (now() - w0) / 1000.0
     tracer.foreach(_.open())
-    val (rs, wall) = closedLoop(p.int("clients"), p.dbl("seconds"), 0,
-      p.int("min_requests"))
+    val t0 = System.nanoTime()
+    val deadline = t0 + (p.dbl("seconds") * 1e9).toLong
+    val rs = mutable.ArrayBuffer.empty[Req]
+    while (System.nanoTime() < deadline || rs.size < MinRequests)
+      rs += request()
+    val wall = (System.nanoTime() - t0) / 1e9
     tracer.foreach(_.close())
-    heap += liveHeapMb()
+    out("heap_live_peak_mb") = liveHeapMb()
     val wrong = (warm ++ rs).filter(r => r.error == null &&
       !expected.get(s"${r.ep}|${r.day}").contains(r.answer))
     out("wall_s") = wall
@@ -314,30 +294,22 @@ object PerfBench {
         "fr" -> 0.15),
       packBudget = 512, minSharedPct = 20)
 
+  /** One `curate` call written to parquet, as a batch job on a fresh
+    * JVM: no warm-up. */
   def curateBatch(spark: SparkSession, p: Params, out: Out,
-      tracer: Option[Tracer], heap: mutable.Buffer[Double]): Unit = {
+      tracer: Option[Tracer]): Unit = {
     val work = p("work")
     Files.writeString(Paths.get(work, "oracle.sql"),
       graft.SparkEntry.oracleSql("x_curation_e2e"))
-    // no warm-up: a curation batch job runs once in a fresh JVM
     out("warmup_s") = 0.0
     val docs = spark.read.parquet(p("corpus"))
-    val walls = mutable.ArrayBuffer.empty[Double]
-    val outs = mutable.ArrayBuffer.empty[String]
-    val m0 = now()
-    // another call only if it should end inside the measured time
-    while (walls.isEmpty ||
-        now() - m0 + walls.last * 1000 <= p.dbl("seconds") * 1000) {
-      val dst = s"$work/curated/rep${walls.size}"
-      tracer.foreach(_.open())
-      val s = System.nanoTime()
-      curate(docs).write.parquet(dst)
-      walls += (System.nanoTime() - s) / 1e9
-      tracer.foreach(_.close())
-      outs += dst
-      heap += liveHeapMb()
-    }
-    out("walls_s") = walls
-    out("outputs") = outs
+    val dst = s"$work/curated"
+    tracer.foreach(_.open())
+    val s = System.nanoTime()
+    curate(docs).write.parquet(dst)
+    out("wall_s") = (System.nanoTime() - s) / 1e9
+    tracer.foreach(_.close())
+    out("heap_live_peak_mb") = liveHeapMb()
+    out("output") = dst
   }
 }

@@ -72,31 +72,26 @@ final class Tracer(spark: org.apache.spark.sql.SparkSession, cores: Int) {
     }
   }
 
-  /** Final `numRowsTotal` of each query's stateful operators, recorded per
-    * repetition (a stopped handle keeps its last progress). */
-  private val stateByRep = mutable.ArrayBuffer.empty[Map[String, Long]]
-  def endRep(qs: Map[String, StreamingQuery]): Unit = {
-    poll(qs)
-    stateByRep += progress.synchronized(lastState.toMap)
-  }
+  /** Final progress of every handle once the chain is drained (a stopped
+    * handle keeps its last progress). */
+  def finish(qs: Map[String, StreamingQuery]): Unit = poll(qs)
 
-  /** Per-query layer metrics, as a mean per repetition. */
-  def queryMetrics(names: Seq[(String, String)], reps: Int): Seq[(String, Double)] = {
+  /** Per-query layer metrics; `state_rows` is the final `numRowsTotal` of
+    * the query's stateful operators. */
+  def queryMetrics(names: Seq[(String, String)]): Seq[(String, Double)] = {
     val all = progress.synchronized(progress.values.toSeq)
-    val r = math.max(reps, 1).toDouble
     names.flatMap { case (q, label) =>
       val ps = all.filter(_.query == q)
       val busy = ps.map(_.trigger).sum / 1000.0
       val work = ps.map(_.addBatch).sum / 1000.0
-      val state = stateByRep.map(_.getOrElse(q, 0L)).sum.toDouble
       Seq(
-        s"$label.batches" -> ps.count(_.executed) / r,
-        s"$label.busy_s" -> busy / r,
-        s"$label.work_s" -> work / r,
-        s"$label.fixed_s" -> (busy - work) / r,
-        s"$label.rows_in" -> ps.map(_.rowsIn).sum / r,
-        s"$label.state_rows" -> state / math.max(stateByRep.size, 1),
-        s"$label.late_dropped" -> ps.map(_.late).sum / r)
+        s"$label.batches" -> ps.count(_.executed).toDouble,
+        s"$label.busy_s" -> busy,
+        s"$label.work_s" -> work,
+        s"$label.fixed_s" -> (busy - work),
+        s"$label.rows_in" -> ps.map(_.rowsIn).sum.toDouble,
+        s"$label.state_rows" -> lastState.getOrElse(q, 0L).toDouble,
+        s"$label.late_dropped" -> ps.map(_.late).sum.toDouble)
     }
   }
 

@@ -1,6 +1,6 @@
-"""Percentiles and the file-timeline readings: when each event-time slice
-first arrived in a wire topic, and when each DWS window first became
-visible, both from file mtimes and contents, read after the run.
+"""Percentiles and the file-timeline readings: when each 10 s event-time
+window first arrived in a wire topic or became visible in a DWS table,
+from file mtimes and contents, read after the run.
 
 The computations are pure over (mtime, [event times]) lists, so the tests
 drive them on a synthetic file timeline.
@@ -40,30 +40,19 @@ def stt_ms(s):
         tzinfo=datetime.timezone.utc).timestamp() * 1000)
 
 
-def slice_of(ts, bounds):
-    """Index into `bounds` [(lo, hi), ...] (sorted, disjoint) of the slice
-    holding event time ts, or None."""
-    lo_i, hi_i = 0, len(bounds) - 1
-    while lo_i <= hi_i:
-        mid = (lo_i + hi_i) // 2
-        lo, hi = bounds[mid]
-        if ts < lo:
-            hi_i = mid - 1
-        elif ts >= hi:
-            lo_i = mid + 1
-        else:
-            return mid
-    return None
+WINDOW_MS = 10_000
 
 
-def first_arrival(files, bounds):
-    """files: [(mtime_ms, [event_ms, ...]), ...]. Returns {slice index:
-    earliest mtime of a file holding an event of that slice}."""
+def first_arrival(files, window_ms=WINDOW_MS):
+    """files: [(mtime_ms, [event_ms, ...]), ...]. Returns {window start:
+    earliest mtime of a file holding an event of that event-time window}.
+    A DWS file's events are its window starts, so the same reading gives
+    when each DWS window became visible."""
     first = {}
     for mtime, events in files:
-        for i in {slice_of(t, bounds) for t in events}:
-            if i is not None and (i not in first or mtime < first[i]):
-                first[i] = mtime
+        for w in {t - t % window_ms for t in events}:
+            if w not in first or mtime < first[w]:
+                first[w] = mtime
     return first
 
 
@@ -121,14 +110,3 @@ def read_dws(root, name):
         out.append((os.stat(f).st_mtime_ns // 1_000_000,
                     [stt_ms(s) for s in set(stts)]))
     return out
-
-
-def first_window_visible(files):
-    """{window start: earliest mtime of a file holding that window} for
-    one DWS table, from read_dws output."""
-    first = {}
-    for mtime, stts in files:
-        for w in stts:
-            if w not in first or mtime < first[w]:
-                first[w] = mtime
-    return first

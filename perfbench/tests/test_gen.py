@@ -7,6 +7,7 @@ import unittest
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.dirname(HERE))
 import gen  # noqa: E402
+import stats  # noqa: E402
 
 
 def tree(d):
@@ -18,8 +19,7 @@ def tree(d):
     return out
 
 
-SMALL_ODS = dict(events_per_slice=200, orders_per_slice=8, facts_per_slice=3,
-                 slice_ms=60_000)
+SMALL_ODS = dict(events_per_slice=200, slice_ms=120_000)
 
 
 class DeterminismTest(unittest.TestCase):
@@ -36,11 +36,12 @@ class DeterminismTest(unittest.TestCase):
             self.assertNotEqual(a, c)
 
     def test_ods(self):
-        self.check(lambda d, s: gen.gen_ods(d, s, 2, 1_700_000_000_000,
+        self.check(lambda d, s: gen.gen_ods(d, s, 1_700_000_000_000,
                                             SMALL_ODS))
 
     def test_dws(self):
-        self.check(lambda d, s: gen.gen_dws(d, s, dict(days=2)))
+        self.check(lambda d, s: gen.gen_dws(d, s, dict(days=2,
+                                                       events_per_day=300)))
 
     def test_docs(self):
         self.check(lambda d, s: gen.gen_docs(f"{d}/documents.parquet", s,
@@ -51,27 +52,64 @@ class OdsContractTest(unittest.TestCase):
 
     def test_timeline(self):
         t0 = 1_700_000_000_000
+        logs, cdc, hi = gen.ods_backlog(3, t0, SMALL_ODS)
+        self.assertEqual(hi, t0 + 120_000)
+        self.assertEqual(len(logs), 200)
+        self.assertEqual(len(cdc), 7 * 30)  # 0.15 orders per log line
+        tables = {json.loads(c)["tableName"] for c in cdc}
+        self.assertEqual(tables, {"order_info", "order_detail",
+                                  "payment_info", "favor_info", "cart_info",
+                                  "comment_info", "refund_payment"})
         seen = set()
-        for k, lo, hi, logs, cdc in gen.ods_slices(3, 3, t0, SMALL_ODS):
-            self.assertEqual((lo, hi), (t0 + k * 60_000, t0 + (k + 1) * 60_000))
-            tables = {json.loads(c)["tableName"] for c in cdc}
-            self.assertEqual(tables, {"order_info", "order_detail",
-                                      "payment_info", "favor_info",
-                                      "cart_info", "comment_info",
-                                      "refund_payment"})
-            for line in logs:
-                rec = json.loads(line)
-                self.assertTrue(lo <= rec["ts"] < hi)
-                key = (rec["common"]["mid"], rec["ts"])
-                self.assertNotIn(key, seen)  # the Bounce contract
-                seen.add(key)
-            for c in cdc:
-                after = json.loads(c)["after"]
-                if "ts" in after:
-                    self.assertTrue(lo <= int(after["ts"]) < hi)
+        for line in logs:
+            rec = json.loads(line)
+            self.assertTrue(t0 <= rec["ts"] < hi)
+            key = (rec["common"]["mid"], rec["ts"])
+            self.assertNotIn(key, seen)  # the Bounce contract
+            seen.add(key)
+        for c in cdc:
+            env = json.loads(c)
+            after = env["after"]
+            t = (int(after["ts"]) if "ts" in after
+                 else stats.stt_ms(after["create_time"]))
+            self.assertTrue(t0 <= t < hi, env)
 
 
 class DwsExpectedTest(unittest.TestCase):
+
+    def test_windows_aggregate_the_ods_process(self):
+        t0 = gen.DAY0_MS
+        ev = [
+            # u1: entry, search 5 s later, entry 60 s later (a bounce)
+            {"ts": t0 + 1_000, "uid": 1, "ch": "view", "kind": "home",
+             "dur": 10},
+            {"ts": t0 + 6_000, "uid": 1, "ch": "view", "kind": "search",
+             "item": "kw3", "dur": 20},
+            {"ts": t0 + 66_000, "uid": 1, "ch": "view", "kind": "detail",
+             "item": "4", "dur": 30, "displays": ["4", "5"]},
+            {"ts": t0 + 67_000, "uid": 2, "ch": "view", "kind": "start"},
+        ]
+        orders = [{"oid": 1, "uid": 2, "prov": 3, "sku": 4, "amt": 1234,
+                   "c_ms": t0 + 2_000, "p_ms": t0 + 62_000}]
+        w = gen.dws_windows(ev, orders)
+        w0 = (gen.fmt_ts(t0), gen.fmt_ts(t0 + 10_000))
+        w60 = (gen.fmt_ts(t0 + 60_000), gen.fmt_ts(t0 + 70_000))
+        self.assertEqual(w["visitor"][w0 + ("v1", "view", "1", "0")],
+                         {"uv_ct": 1, "pv_ct": 2, "sv_ct": 1, "uj_ct": 0,
+                          "dur_sum": 30})
+        self.assertEqual(w["visitor"][w60 + ("v1", "view", "1", "0")],
+                         {"uv_ct": 0, "pv_ct": 1, "sv_ct": 1, "uj_ct": 1,
+                          "dur_sum": 30})
+        self.assertEqual(w["keyword"], {w0 + ("kw3", "search"): {"ct": 1}})
+        self.assertEqual(w["product"][w60 + (4,)],
+                         {"click_ct": 1, "display_ct": 1,
+                          "payment_amount": 1234, "paid_order_ct": 1})
+        self.assertEqual(w["product"][w0 + (4,)],
+                         {"favor_ct": 1, "cart_ct": 1, "order_amount": 1234,
+                          "order_ct": 1})
+        self.assertEqual(
+            w["province"][w0 + (3, "PROVINCE_03", "103", "ISO-3")],
+            {"order_count": 1, "order_amount": 1234})
 
     def test_answers_use_latest_version_only(self):
         latest = {
@@ -94,7 +132,8 @@ class DwsExpectedTest(unittest.TestCase):
     def test_files_hold_stale_and_replayed_rows(self):
         import pyarrow.parquet as pq
         with tempfile.TemporaryDirectory(dir=HERE) as d:
-            exp = gen.gen_dws(d, 5, dict(days=2, dup_share=0.5))
+            exp = gen.gen_dws(d, 5, dict(days=2, dup_share=0.5,
+                                         events_per_day=300))
             self.assertEqual(len(exp["days"]), 2)
             rows = pq.read_table(f"{d}/product").to_pylist()
             keys = [(r["stt"], r["sku_id"]) for r in rows]

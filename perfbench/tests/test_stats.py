@@ -29,27 +29,20 @@ class PercentileTest(unittest.TestCase):
 
 
 class TimelineTest(unittest.TestCase):
-    """A synthetic file timeline: three slices, files landing at known
-    mtimes with known event times."""
+    """A synthetic file timeline: files landing at known mtimes with known
+    event times."""
 
-    BOUNDS = [(0, 100), (100, 200), (200, 300)]
+    def test_first_arrival_takes_earliest_file_per_window(self):
+        files = [(1500, [15_000, 25_000]), (1000, [1_000, 12_000]),
+                 (1200, [2_000]), (900, [])]
+        self.assertEqual(stats.first_arrival(files),
+                         {0: 1000, 10_000: 1000, 20_000: 1500})
+        self.assertEqual(stats.first_arrival(files, window_ms=20_000),
+                         {0: 1000, 20_000: 1500})
 
-    def test_slice_of(self):
-        self.assertEqual(stats.slice_of(0, self.BOUNDS), 0)
-        self.assertEqual(stats.slice_of(199, self.BOUNDS), 1)
-        self.assertEqual(stats.slice_of(200, self.BOUNDS), 2)
-        self.assertIsNone(stats.slice_of(300, self.BOUNDS))
-        self.assertIsNone(stats.slice_of(-1, self.BOUNDS))
-
-    def test_first_arrival_takes_earliest_file_per_slice(self):
-        files = [(1500, [150, 250]), (1000, [10, 120]), (1200, [20]),
-                 (900, [999])]  # the last holds no slice's events
-        self.assertEqual(stats.first_arrival(files, self.BOUNDS),
-                         {0: 1000, 1: 1000, 2: 1500})
-
-    def test_first_window_visible(self):
+    def test_dws_window_starts_map_to_themselves(self):
         files = [(30, [0, 10_000]), (20, [10_000]), (40, [20_000])]
-        self.assertEqual(stats.first_window_visible(files),
+        self.assertEqual(stats.first_arrival(files),
                          {0: 30, 10_000: 20, 20_000: 40})
 
     def test_reads_mtimes_and_contents_from_files(self):
@@ -75,13 +68,13 @@ class TimelineTest(unittest.TestCase):
             # hidden checksum files are not part of the table
             open(os.path.join(dws, ".part-a.parquet.crc"), "w").close()
 
-            vis = stats.first_window_visible(stats.read_dws(root, "visitor"))
+            vis = stats.first_arrival(stats.read_dws(root, "visitor"))
             self.assertEqual(vis, {1_700_000_000_000: 1_000,
                                    1_700_000_010_000: 2_000})
             ow = stats.read_topic(root, "dwm_order_wide")
             self.assertEqual(ow, [(3_000, [1_700_000_000_500])])
-            bounds = [(1_700_000_000_000, 1_700_000_001_000)]
-            self.assertEqual(stats.first_arrival(ow, bounds), {0: 3_000})
+            self.assertEqual(stats.first_arrival(ow),
+                             {1_700_000_000_000: 3_000})
 
 
 if __name__ == "__main__":
